@@ -63,18 +63,6 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # One-time engine warmup against SYNTHETIC data (spark.range + a temp-dir
-    # parquet round-trip): codegen bring-up, shuffle/broadcast/window paths,
-    # the parquet reader stack, and the Arrow Python worker fork are session
-    # one-offs, not query cost — without this they land on whichever query a
-    # harness happens to run first (measured ~4-6 s on the first scan query
-    # and ~1.5 s on the first Arrow-UDF query of a fresh JVM). Reads nothing
-    # from any input dataset and caches no result; every query below still
-    # computes from its parquet inputs on every invocation.
-    from newscrawler_spark.session import warm_engine
-
-    warm_engine()
-
     q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 
     # ---------------- search / filter / pagination (F3,F4,P4,O1,O2,O3)

@@ -8,8 +8,8 @@ Output: {"metric": ..., "value": total_sec, "unit": "sec",
          "queries": {name: sec, ...}, "sf": ...,
          "drain_urls_per_sec": ..., ...}
 
-Scaling-efficiency evidence (local[8] vs local[32]) lives in
-scripts/bench_scaling.py → BENCH.md, since one JVM cannot switch masters.
+Scaling-efficiency evidence (1 vs 4 executors) lives in
+scripts/bench_scaling_cluster.py → BENCH.md, since one JVM cannot switch masters.
 """
 
 from __future__ import annotations
@@ -24,7 +24,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from newscrawler_spark.session import get_spark  # noqa: E402
+from newscrawler_spark.session import get_spark, warm_engine  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -200,6 +200,9 @@ def main() -> None:
     ambient, window_wait = wait_for_window()
     spark = get_spark(app_name="newscrawler-bench", cores=CPUS)
     spark.sparkContext.setLogLevel("ERROR")
+    # untimed one-off JVM warm-up (codegen, shuffle, Arrow worker fork), so
+    # it does not land on whichever query happens to run first
+    warm_engine(spark)
     queries = bench_queries(spark)
     drain = bench_drain(spark)
     total = round(sum(queries.values()) + drain["drain_sec"], 3)

@@ -52,7 +52,9 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     import __spark_entry__ as E
     from newscrawler_spark.functions import dedup as D
+    from newscrawler_spark.session import warm_engine
 
+    warm_engine(spark)
     qs = E.queries()
     names = list(HEADLINE) + ["simhash_prod"]
     if args.only:

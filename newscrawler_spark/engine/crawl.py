@@ -37,6 +37,8 @@ few survivors exactly per host. Identical result, bounded task size.
 
 from __future__ import annotations
 
+import time
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import Iterator
 
@@ -45,7 +47,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .. import codecs, datagen
+from .. import codecs, datagen, tablelib
 from ..tablelib import Catalog
 from ..urlnorm import with_url_identity
 from .seenfilter import BLOOM_DDL, SeenBloom
@@ -55,6 +57,7 @@ FRONTIER_DDL = (
     "bucket int, priority double, discovered_at timestamp, category string, "
     "language string, retry_count int, not_before int"
 )
+FRONTIER_COLS = [c.strip().split(" ")[0] for c in FRONTIER_DDL.split(",")]
 SEEN_DDL = "url_hash long, bucket int"
 STORE_DDL = (
     "url_hash long, bucket int, host string, image_id string, caption string, "
@@ -110,16 +113,45 @@ class CrawlConfig:
     max_retries: int = 3
     expand: bool = True          # full-coverage link expansion on/off
     min_caption_len: int = 1000  # crawl admission filter (main.py:183-184)
-    cache_aside: bool = True     # skip fetch+decode for already-stored URLs
-    parallel_commit: bool = True  # overlap the 6 independent table commits
     # above this batch size the epoch switches to the cluster-scale shape:
     # no TakeOrderedAndProject driver merge in select_batch and no broadcast
     # of the batch into the payload join (VERDICT r01 perf #2)
     distributed_batch_threshold: int = 500_000
-    use_bloom: bool = True       # bloom prefilter in front of the seen anti-join
     # zone-map pruning of the per-epoch frontier scan via manifest stats
     # (batch-identical by construction; see _frontier_scan_buckets)
     prune_frontier_scan: bool = True
+
+
+@dataclass
+class _EpochState:
+    """What one run_epoch hands from phase to phase."""
+
+    epoch: int
+    batch: DataFrame | None = None
+    n_batch: int = 0
+    # cache-aside split: re-queued batch keys, and those the store serves
+    touched_pend: DataFrame | None = None
+    n_pend: int = 0
+    hits: DataFrame | None = None
+    cached_counts: dict[int, int] = field(default_factory=dict)
+    results: DataFrame | None = None
+    log_rows: list = field(default_factory=list)
+    n_stored: int = 0
+    n_retry: int = 0
+    n_dead: int = 0
+    retry_rows: DataFrame | None = None
+    discovered: DataFrame | None = None
+    disc_counts: dict[int, int] = field(default_factory=dict)
+    n_discovered: int = 0
+    marks: list[tuple[str, float]] = field(default_factory=list)
+    t_mark: float = field(default_factory=time.time)
+
+    def mark(self, name: str) -> None:
+        # one clock read per phase: run_epoch exposes the split via
+        # _last_epoch_marks so a bench can name the phase a regression is in
+        now = time.time()
+        self.marks.append((name, round(now - self.t_mark, 2)))
+        self.t_mark = now
 
 
 class CrawlEngine:
@@ -278,7 +310,7 @@ class CrawlEngine:
             .drop("_rn")
             .withColumn("retry_count", F.lit(0))
             .withColumn("not_before", F.lit(0))
-            .select(*[c.strip().split(" ")[0] for c in FRONTIER_DDL.split(",")])
+            .select(*FRONTIER_COLS)
         )
         # the seed list size bounds both writes (dedup+gate only shrink it):
         # a small bootstrap packs to one file instead of one per bucket
@@ -329,12 +361,8 @@ class CrawlEngine:
         if self.cfg.expand:
             self._seed_dim_gated_df().count()
             self._permille_df().count()
-        bloom_id = (
-            self.seen_bloom.rebuild_buckets(
-                self.spark, self.seen, list(range(cfg.bucket_count))
-            )
-            if cfg.use_bloom
-            else self.seen_bloom.table.current_snapshot_id()
+        bloom_id = self.seen_bloom.rebuild_buckets(
+            self.spark, self.seen, list(range(cfg.bucket_count))
         )
         self._checkpoint(
             -1,
@@ -413,15 +441,11 @@ class CrawlEngine:
         background worker. Caller must have already marked ``counts``'
         buckets dirty and checkpointed; ``delta`` must be a cached DataFrame
         of (url_hash, bucket) this object may hold until _await_bloom."""
-        if not self.cfg.use_bloom:
-            return
         with self._bloom_lock:
             any_dirty = bool(self._bloom_dirty)
         if delta is None and not any_dirty:
             return
         if self._bloom_exec is None:
-            from concurrent.futures import ThreadPoolExecutor
-
             self._bloom_exec = ThreadPoolExecutor(
                 max_workers=1, thread_name_prefix="bloom-maintain"
             )
@@ -443,55 +467,33 @@ class CrawlEngine:
         E+1's select+fetch. Dirty marks are cleared only AFTER the table
         commit that makes them fresh, so every interleaving with _checkpoint
         or a concurrent reader is conservative."""
-        import time as _time
-
         spark = self.spark
-        profile = bool(__import__("os").environ.get("CRAWL_PROFILE"))
-        spark.sparkContext.setLocalProperty("spark.scheduler.pool", "bloom-maintain")
-        try:
-            if delta is not None and counts:
-                t0 = _time.time()
-                resize = self.seen_bloom.add_keys(
-                    spark, delta.select("url_hash", "bucket"), counts=counts
-                )
-                # ownership-aware clear (ADVICE r06 high): only the marks
-                # this epoch's delta-marking created may be cleared here —
-                # a stream-ingest mark on the same bucket carries a newer
-                # generation (or predates the epoch marking, in which case
-                # no token was issued) and survives to the rebuild pass,
-                # whose seen rescan is what actually covers its keys.
-                rs = set(resize)
-                self._clear_bloom_dirty(
-                    {b: g for b, g in (own_token or {}).items() if b not in rs}
-                )
-                if profile:
-                    print(
-                        f"[profile] deferred bloom add_keys: "
-                        f"{_time.time() - t0:.2f}s",
-                        flush=True,
-                    )
-            with self._bloom_lock:
-                # snapshot marks WITH their generations: the rebuild below
-                # re-reads seen, so it covers every mark set before this
-                # point (markers commit their seen append before marking);
-                # a mark arriving DURING the rebuild bumps the generation
-                # and the token-checked clear leaves it dirty
-                token = {
-                    b: self._bloom_mark_gen.get(b, 0) for b in self._bloom_dirty
-                }
-            dirty = sorted(token)
-            if dirty:
-                t0 = _time.time()
-                self.seen_bloom.rebuild_buckets(spark, self.seen, dirty)
-                self._clear_bloom_dirty(token)
-                if profile:
-                    print(
-                        f"[profile] deferred bloom rebuild({len(dirty)}): "
-                        f"{_time.time() - t0:.2f}s",
-                        flush=True,
-                    )
-        finally:
-            spark.sparkContext.setLocalProperty("spark.scheduler.pool", None)
+        if delta is not None and counts:
+            resize = self.seen_bloom.add_keys(
+                spark, delta.select("url_hash", "bucket"), counts=counts
+            )
+            # ownership-aware clear (ADVICE r06 high): only the marks
+            # this epoch's delta-marking created may be cleared here —
+            # a stream-ingest mark on the same bucket carries a newer
+            # generation (or predates the epoch marking, in which case
+            # no token was issued) and survives to the rebuild pass,
+            # whose seen rescan is what actually covers its keys.
+            rs = set(resize)
+            self._clear_bloom_dirty(
+                {b: g for b, g in (own_token or {}).items() if b not in rs}
+            )
+        with self._bloom_lock:
+            # snapshot marks WITH their generations: the rebuild below
+            # re-reads seen, so it covers every mark set before this
+            # point (markers commit their seen append before marking);
+            # a mark arriving DURING the rebuild bumps the generation
+            # and the token-checked clear leaves it dirty
+            token = {
+                b: self._bloom_mark_gen.get(b, 0) for b in self._bloom_dirty
+            }
+        if token:
+            self.seen_bloom.rebuild_buckets(spark, self.seen, sorted(token))
+            self._clear_bloom_dirty(token)
 
     def _await_bloom(self) -> None:
         """Land the in-flight bloom-maintenance job (if any). Called before
@@ -531,7 +533,7 @@ class CrawlEngine:
             .drop("_rn")
             .withColumn("retry_count", F.lit(0))
             .withColumn("not_before", F.lit(not_before))
-            .select(*[c.strip().split(" ")[0] for c in FRONTIER_DDL.split(",")])
+            .select(*FRONTIER_COLS)
         )
         if not self.frontier.is_empty():
             pending = self.frontier.read(self.spark).select("url_hash")
@@ -992,94 +994,119 @@ class CrawlEngine:
     # -------------------------------------------------------------- epoch
 
     def run_epoch(self, epoch: int) -> dict:
-        import os
-        import time as _time
+        """One drain epoch: select, fetch, expand, commit, maintain.
 
-        profile = bool(os.environ.get("CRAWL_PROFILE"))
-        marks: list[tuple[str, float]] = []
-        _t = _time.time()
+        The seven table commits write seven DIFFERENT tables, so their
+        Spark jobs are independent; running them sequentially left a flat
+        ~8 s of commit latency per epoch that crushed N->4N scaling
+        (VERDICT r01 perf #1). They run on one pool — Spark schedules
+        concurrent jobs from one driver — and the store, host, order and
+        tombstone commits are submitted before link expansion, which they
+        overlap; frontier, seen, log and pending follow it (it is their
+        input). Leaving the pool waits out every in-flight commit, so a
+        failed phase never unwinds while a worker still flips a table
+        pointer (ADVICE r02)."""
+        st = _EpochState(epoch)
+        self._select(st)
+        if st.n_batch == 0:
+            return self._drained(st)
+        self._fetch(st)
+        # land the previous epoch's deferred bloom maintenance — it has been
+        # running concurrently with this epoch's select+fetch (its result is
+        # first needed by split_new); on a healthy run this is a no-op wait
+        self._await_bloom()
+        with ThreadPoolExecutor(max_workers=8, thread_name_prefix="epoch-commit") as pool:
+            early = self._submit_early_commits(st, pool)
+            self._expand(st)
+            snapshots = self._commit(st, pool, early)
+        st.mark("parallel_commit")
+        self._maintain(st, snapshots)
+        self._last_epoch_marks = st.marks
+        stats = {
+            "epoch": epoch,
+            "fetched": st.n_batch,
+            "cached": sum(st.cached_counts.values()),
+            "stored": st.n_stored,
+            "discovered": st.n_discovered,
+            "dead": st.n_dead,
+            # driver-resident commit-protocol time this epoch (manifest
+            # fsyncs + pointer flips + checkpoint) — the non-distributable
+            # part of the commit path; design target < 1 s
+            "driver_commit_s": round(tablelib.take_driver_commit_seconds(), 3),
+            "done": False,
+        }
+        for df in (st.batch, st.results, st.hits, st.touched_pend):
+            if df is not None:
+                df.unpersist()
+        return stats
 
-        def mark(name: str) -> None:
-            # always recorded (one clock read per phase): run_epoch exposes
-            # the split via _last_epoch_marks so the bench can report which
-            # phase a regression lives in; printing stays CRAWL_PROFILE-gated
-            nonlocal _t
-            now = _time.time()
-            marks.append((name, round(now - _t, 2)))
-            _t = now
-
-        cfg = self.cfg
-        spark = self.spark
-        batch = self.select_batch(epoch).cache()
-        n_batch = batch.count()
+    def _select(self, st: _EpochState) -> None:
+        st.batch = self.select_batch(st.epoch).cache()
+        st.n_batch = st.batch.count()
         if self._epoch_tmp is not None:
             self._epoch_tmp.unpersist()
             self._epoch_tmp = None
-        mark("select_batch")
-        if n_batch == 0:
-            # nothing eligible this epoch; pending retries may unlock later.
-            # The manifest row bound skips the full-frontier count unless it
-            # reaches 0 — then the exact count confirms "done" (the bound is
-            # a lower bound under merge-on-read, never an upper one).
-            self._await_bloom()  # settle the deferred job before 'done'
-            stats = self.frontier.bucket_stats()
-            n_left = (
-                sum(max(s["n"] - s["tomb"], 0) for s in stats.values())
-                if stats is not None
-                else None
-            )
-            if not n_left:
-                n_left = 0 if self.frontier.is_empty() else self.frontier.read(spark).count()
-            ck = self.catalog.last_checkpoint()
-            self._checkpoint(epoch, ck["snapshots"] if ck else {})
-            self._last_epoch_marks = marks
-            return {"epoch": epoch, "fetched": 0, "done": n_left == 0}
+        st.mark("select_batch")
 
+    def _drained(self, st: _EpochState) -> dict:
+        """The empty-batch epoch: checkpoint, and report whether the
+        frontier is done (pending retries may unlock later). The manifest
+        row bound skips the full-frontier count unless it reaches 0 — then
+        the exact count confirms "done" (the bound is a lower bound under
+        merge-on-read, never an upper one)."""
+        self._await_bloom()  # settle the deferred job before 'done'
+        stats = self.frontier.bucket_stats()
+        n_left = (
+            sum(max(s["n"] - s["tomb"], 0) for s in stats.values())
+            if stats is not None
+            else None
+        )
+        if not n_left:
+            n_left = 0 if self.frontier.is_empty() else self.frontier.read(self.spark).count()
+        ck = self.catalog.last_checkpoint()
+        self._checkpoint(st.epoch, ck["snapshots"] if ck else {})
+        self._last_epoch_marks = st.marks
+        return {"epoch": st.epoch, "fetched": 0, "done": n_left == 0}
+
+    def _fetch(self, st: _EpochState) -> None:
+        cfg, spark = self.cfg, self.spark
         # cache-aside split (reference article_extractor.py:412-479): batch
         # URLs already in the store are served from it — no HTTP, no decode.
         # Possible only for re-queued keys (the seen-set invariant keeps
         # stored URLs out of the frontier otherwise), so the split is
         # bounded by the small requeue_pending table and costs nothing once
         # it drains — never a standing per-epoch store scan.
-        hits: DataFrame | None = None
-        touched_pend: DataFrame | None = None
-        n_pend = 0
-        cached_counts: dict[int, int] = {}
-        fetch_input = batch
-        if (
-            cfg.cache_aside
-            and not self.requeue_pending.is_empty()
-            and not self.store.is_empty()
-        ):
+        fetch_input = st.batch
+        if not self.requeue_pending.is_empty() and not self.store.is_empty():
             pend = self.requeue_pending.read(spark).select("url_hash")
-            touched_pend = batch.join(pend, on="url_hash", how="left_semi").cache()
-            n_pend = touched_pend.count()
-            if n_pend:
+            st.touched_pend = st.batch.join(pend, on="url_hash", how="left_semi").cache()
+            st.n_pend = st.touched_pend.count()
+            if st.n_pend:
                 store_keys = self.store.read(spark).select("url_hash")
-                hits = touched_pend.join(
+                st.hits = st.touched_pend.join(
                     store_keys, on="url_hash", how="left_semi"
                 ).cache()
-                cached_counts = {
+                st.cached_counts = {
                     r["bucket"]: int(r["n"])
-                    for r in hits.groupBy("bucket")
+                    for r in st.hits.groupBy("bucket")
                     .agg(F.count("*").alias("n"))
                     .collect()
                 }
-            if cached_counts:
-                fetch_input = batch.join(
-                    hits.select("url_hash"), on="url_hash", how="left_anti"
+            if st.cached_counts:
+                fetch_input = st.batch.join(
+                    st.hits.select("url_hash"), on="url_hash", how="left_anti"
                 )
-            elif hits is not None:
-                hits.unpersist()
-                hits = None
-        results = self.fetch_batch(fetch_input).cache()
+            elif st.hits is not None:
+                st.hits.unpersist()
+                st.hits = None
+        st.results = self.fetch_batch(fetch_input).cache()
 
         # per-bucket lineage metrics in ONE aggregation pass over results;
         # also materializes the results cache and hands every downstream
         # commit its touched-bucket list for free
         failed_c = F.col("status") != 200
-        log_rows = (
-            results.groupBy("bucket")
+        st.log_rows = (
+            st.results.groupBy("bucket")
             .agg(
                 F.count("*").alias("n_fetched"),
                 F.sum(
@@ -1100,390 +1127,263 @@ class CrawlEngine:
             )
             .collect()
         )
-        mark("fetch+log_agg")
-        # land the previous epoch's deferred bloom maintenance — it has been
-        # running concurrently with this epoch's select+fetch (its result is
-        # first needed by split_new below); on a healthy run this is a no-op
-        # wait, the job is minutes done by the time fetch+decode finishes
-        self._await_bloom()
-        store_buckets = sorted(
-            {r["bucket"] for r in log_rows if r["n_stored"] > 0} | set(cached_counts)
-        )
-        n_dead = sum(r["n_dead"] for r in log_rows)
-        n_retry = sum(r["n_retry"] for r in log_rows)
-        n_stored_total = sum(r["n_stored"] for r in log_rows)
-        n_cached_total = sum(cached_counts.values())
+        st.n_stored = sum(int(r["n_stored"]) for r in st.log_rows)
+        st.n_retry = sum(int(r["n_retry"]) for r in st.log_rows)
+        st.n_dead = sum(int(r["n_dead"]) for r in st.log_rows)
+        st.mark("fetch+log_agg")
 
-        # --- store MERGE: valid + admission filter (caption >= 1000 chars);
+    def _submit_early_commits(
+        self, st: _EpochState, pool: ThreadPoolExecutor
+    ) -> dict[str, Future | None]:
+        early: dict[str, Future | None] = {
+            "store": pool.submit(self._commit_store, st),
+            "host_state": pool.submit(self._commit_host, st),
+            "crawl_order": pool.submit(self._commit_order, st),
+            "tombstone": None,  # storage backend without the pre-write seam
+        }
+        # the frontier MOR tombstone needs only the batch keys — write its
+        # files now, overlapped with link expansion, so the commit tail
+        # keeps just the insert write + manifest flip (the dirs are inert
+        # until the manifest references them; a failed epoch leaves
+        # orphans for the compaction GC)
+        if hasattr(self.frontier, "prepare_tombstone"):
+            early["tombstone"] = pool.submit(
+                self.frontier.prepare_tombstone,
+                st.batch.select("url_hash", "bucket"), "url_hash",
+                pack_rows=st.n_batch,
+            )
+        return early
+
+    def _expand(self, st: _EpochState) -> None:
+        cfg, spark, epoch = self.cfg, self.spark, st.epoch
+        # --- retries / dead letters (403/429 backoff re-queue, T4)
+        failures = st.results.filter(F.col("status") != 200).select("url_hash", "status")
+        retry = st.batch.join(failures, on="url_hash", how="inner").filter(
+            F.col("retry_count") < cfg.max_retries
+        )
+        backoff = F.element_at(
+            F.array(*[F.lit(b) for b in datagen.POLITENESS["backoff_batches"]]),
+            F.least(F.col("retry_count") + 1, F.lit(len(datagen.POLITENESS["backoff_batches"]))),
+        )
+        st.retry_rows = (
+            retry.withColumn("not_before", (F.lit(epoch) + backoff).cast("int"))
+            .withColumn("retry_count", F.col("retry_count") + 1)
+            .select(*FRONTIER_COLS)
+        )
+        if not cfg.expand:
+            st.discovered = spark.createDataFrame([], FRONTIER_DDL)
+            st.mark("expand")
+            return
+
+        # --- link expansion -> canonicalize -> blocklist -> anti-join seen
+        ok_hashes = st.results.filter(F.col("status") == 200).select("url_hash")
+        # admission gate FUSED into generation (pregated): blocked
+        # children never emitted, robots verdict inline on the host
+        # rank, seed dim pre-filtered once — no anti-join over the
+        # raw expansion, the epoch's largest intermediate
+        disc = self.expand_jvm(ok_hashes, pregated=True)
+        disc = with_url_identity(disc, "url", cfg.bucket_count)
+        # dedup discovered URLs on identity hash, keeping the
+        # lexicographically-smallest raw url as the representative:
+        # min_by is a partial aggregate, so the expansion's heavy
+        # duplication collapses map-side before the shuffle and nothing
+        # is sorted — a row_number window shuffled every duplicate then
+        # sorted each hash group.
+        rest = [c for c in disc.columns if c != "url_hash"]
+        disc = (
+            disc.groupBy("url_hash")
+            .agg(F.min_by(F.struct(*rest), F.col("url")).alias("_r"))
+            .select("url_hash", "_r.*")
+        )
+        # partitioned bloom prefilter; exact anti-join remains the
+        # authority for the maybe-seen slice AND for stale buckets
+        # (snapshot under the lock: streaming ingest may add marks
+        # concurrently, and split_new iterates the set)
+        with self._bloom_lock:
+            stale = set(self._bloom_dirty)
+        new_urls = self.seen_bloom.split_new(spark, disc, self.seen, stale_buckets=stale)
+        st.discovered = (
+            new_urls.withColumn(
+                "priority",
+                (F.pmod(F.col("url_hash"), F.lit(1_000_000)) / 1_000_000.0),
+            )
+            .withColumn("discovered_at", F.lit(_epoch_discovery_ts(epoch)))
+            .withColumn("category", F.lit("general"))
+            .withColumn("language", F.lit("en"))
+            .withColumn("retry_count", F.lit(0))
+            .withColumn("not_before", F.lit(epoch + 1))
+            .select(*FRONTIER_COLS)
+        ).cache()
+        st.disc_counts = {
+            r["bucket"]: int(r["n"])
+            for r in st.discovered.groupBy("bucket").agg(F.count("*").alias("n")).collect()
+        }
+        st.n_discovered = sum(st.disc_counts.values())
+        st.mark("expand")
+
+    def _commit(
+        self, st: _EpochState, pool: ThreadPoolExecutor, early: dict
+    ) -> dict[str, int]:
+        """Submit the commits that read the expansion, then collect every
+        commit's new snapshot id, keyed by table."""
+        late = {
+            "frontier": pool.submit(self._commit_frontier, st, early.pop("tombstone")),
+            "seen": pool.submit(self._commit_seen, st),
+            "fetch_log": pool.submit(self._commit_log, st),
+            "requeue_pending": pool.submit(self._commit_pending, st),
+        }
+        return {name: f.result() for name, f in {**early, **late}.items()}
+
+    def _commit_store(self, st: _EpochState) -> int:
+        # store MERGE: valid + admission filter (caption >= 1000 chars);
         # first_epoch preserved for re-stored rows inside the merge itself
         # (upsert-update keeps created_at, main.py:214-227)
-        stored = (
-            results.filter(F.col("valid") & (F.col("caption_len") >= cfg.min_caption_len))
-            .select(
-                "url_hash", "bucket", "host", "image_id", "caption", "phash",
-                "w", "h", "fmt", "psnr",
-                F.lit(epoch).alias("first_epoch"),
-                F.lit(epoch).alias("last_epoch"),
-            )
+        stored = st.results.filter(
+            F.col("valid") & (F.col("caption_len") >= self.cfg.min_caption_len)
+        ).select(
+            "url_hash", "bucket", "host", "image_id", "caption", "phash",
+            "w", "h", "fmt", "psnr",
+            F.lit(st.epoch).alias("first_epoch"),
+            F.lit(st.epoch).alias("last_epoch"),
         )
-        if hits is not None and cached_counts:
+        if st.hits is not None:
             # cache hits: refresh last_epoch from the stored row — no decode
             refreshed = (
-                self.store.read(spark)
-                .join(hits.select("url_hash"), on="url_hash", how="left_semi")
-                .withColumn("last_epoch", F.lit(epoch))
+                self.store.read(self.spark)
+                .join(st.hits.select("url_hash"), on="url_hash", how="left_semi")
+                .withColumn("last_epoch", F.lit(st.epoch))
                 .select(*stored.columns)
             )
             stored = stored.unionByName(refreshed)
+        touched = {r["bucket"] for r in st.log_rows if r["n_stored"] > 0}
+        # packed-commit bound on the rewrite output: every row already in
+        # the touched buckets (<= the running stored total) plus this
+        # epoch's stored delta; None (resume on an unknown root) keeps the
+        # per-bucket layout
+        bound = (
+            self._store_rows_bound + st.n_stored + sum(st.cached_counts.values())
+            if self._store_rows_bound is not None
+            else None
+        )
+        return self.store.merge_upsert(
+            self.spark, stored, "url_hash",
+            touched=sorted(touched | set(st.cached_counts)),
+            preserve_cols=["first_epoch"], pack_rows=bound,
+        )
 
-        # The six per-epoch table commits write six DIFFERENT tables, so
-        # their Spark jobs are independent; running them sequentially left
-        # a flat ~8 s of commit latency per epoch that crushed N->4N scaling
-        # (VERDICT r01 perf #1). They are submitted from worker threads —
-        # Spark schedules concurrent jobs from one driver — with the only
-        # true ordering kept: seen append before the bloom rebuild that
-        # reads it, expansion before frontier/seen/log (their inputs).
-        from concurrent.futures import ThreadPoolExecutor
-
-        def store_task():
-            # packed-commit bound on the rewrite output: every row already
-            # in the touched buckets (<= the running stored total) plus
-            # this epoch's stored delta; None (resume on an unknown root)
-            # keeps the per-bucket layout
-            bound = (
-                self._store_rows_bound + n_stored_total + n_cached_total
-                if self._store_rows_bound is not None
-                else None
+    def _commit_host(self, st: _EpochState) -> int:
+        host_delta = (
+            st.batch.groupBy("host", "host_hash", "bucket")
+            .agg(F.count("*").alias("_n"))
+            .withColumn("last_epoch", F.lit(st.epoch))
+        )
+        if not self.host_state.is_empty():
+            prev = self.host_state.read(self.spark).select(
+                "host", F.col("fetch_count").alias("_prev")
             )
-            return self.store.merge_upsert(
-                spark, stored, "url_hash",
-                touched=store_buckets, preserve_cols=["first_epoch"],
-                pack_rows=bound,
-            )
-
-        def host_task():
             host_delta = (
-                batch.groupBy("host", "host_hash", "bucket")
-                .agg(F.count("*").alias("_n"))
-                .withColumn("last_epoch", F.lit(epoch))
+                host_delta.join(prev, on="host", how="left")
+                .withColumn("fetch_count", F.coalesce("_prev", F.lit(0)) + F.col("_n"))
+                .drop("_prev", "_n")
             )
-            if not self.host_state.is_empty():
-                prev = self.host_state.read(spark).select(
-                    "host", F.col("fetch_count").alias("_prev")
-                )
-                host_delta = (
-                    host_delta.join(prev, on="host", how="left")
-                    .withColumn(
-                        "fetch_count", F.coalesce("_prev", F.lit(0)) + F.col("_n")
-                    )
-                    .drop("_prev", "_n")
-                )
-            else:
-                host_delta = host_delta.withColumn(
-                    "fetch_count", F.col("_n").cast("long")
-                ).drop("_n")
-            host_delta = host_delta.select(
-                "host", "host_hash", "bucket", "last_epoch", "fetch_count",
-                F.lit(True).alias("robots_allowed"),  # fetched => was admitted
-            )
-            return self.host_state.merge_upsert(
-                spark, host_delta, "host", pack_rows=cfg.n_hosts
-            )
+        else:
+            host_delta = host_delta.withColumn(
+                "fetch_count", F.col("_n").cast("long")
+            ).drop("_n")
+        host_delta = host_delta.select(
+            "host", "host_hash", "bucket", "last_epoch", "fetch_count",
+            F.lit(True).alias("robots_allowed"),  # fetched => was admitted
+        )
+        return self.host_state.merge_upsert(
+            self.spark, host_delta, "host", pack_rows=self.cfg.n_hosts
+        )
 
-        def order_task():
-            return self.crawl_order.append(
-                batch.select(
-                    F.lit(epoch).alias("epoch"), "url_hash", "bucket", "host",
-                    "priority", "discovered_at",
-                ),
-                pack_rows=int(n_batch),
-            )
+    def _commit_order(self, st: _EpochState) -> int:
+        return self.crawl_order.append(
+            st.batch.select(
+                F.lit(st.epoch).alias("epoch"), "url_hash", "bucket", "host",
+                "priority", "discovered_at",
+            ),
+            pack_rows=st.n_batch,
+        )
 
-        pool = ThreadPoolExecutor(max_workers=8) if cfg.parallel_commit else None
-        f_tomb = None
-        try:
-            if pool:
-                _t0_commit = _time.time()
+    def _commit_frontier(self, st: _EpochState, f_tomb: Future | None) -> int:
+        # merge-on-read: the epoch's frontier update appends O(delta) rows
+        # + a tombstone key file instead of rewriting every touched bucket —
+        # at a 10^10-row frontier a COW rewrite per epoch is the commit-path
+        # bottleneck (measured ~15 s/epoch flat in the sandbox); tombstones
+        # are folded in by the periodic compact. The tombstone files were
+        # pre-written during link expansion (f_tomb) so only the insert
+        # write + manifest stay here.
+        tomb_dirs = f_tomb.result() if f_tomb is not None else None
+        return self.frontier.merge_delta(
+            self.spark,
+            None if tomb_dirs is not None else st.batch.select("url_hash", "bucket"),
+            st.retry_rows.unionByName(st.discovered), "url_hash",
+            {"epoch": st.epoch}, mode="mor", tombstone_dirs=tomb_dirs,
+            pack_rows=st.n_retry + st.n_discovered,
+            tombstone_pack_rows=st.n_batch,
+        )
 
-                def _timed_early(name, fn):
-                    def run():
-                        t0 = _time.time()
-                        # each commit job gets its own scheduler pool so FAIR
-                        # mode (SPARK_GRAFT_SCHEDULER=FAIR) shares task slots
-                        # across the concurrent commits instead of FIFO-queueing
-                        # them behind the first-submitted job; a pure no-op
-                        # under the default FIFO scheduler
-                        spark.sparkContext.setLocalProperty(
-                            "spark.scheduler.pool", f"commit-{name}"
-                        )
-                        try:
-                            return fn()
-                        finally:
-                            spark.sparkContext.setLocalProperty(
-                                "spark.scheduler.pool", None
-                            )
-                            if profile:
-                                print(
-                                    f"[profile] commit task {name}: "
-                                    f"{_time.time() - t0:.2f}s "
-                                    f"(t+{t0 - _t0_commit:.2f})",
-                                    flush=True,
-                                )
+    def _commit_seen(self, st: _EpochState) -> int:
+        # seen append only: the bloom OR-in (add_keys) + rebuild are
+        # DEFERRED to a background thread submitted at the end of this
+        # epoch (_submit_bloom) and landed before the next epoch's
+        # split_new — the bloom's first reader. That takes the largest
+        # commit-tail item (11.6-13.7 s measured at the 4x4-core scaling
+        # leg) off the critical path; until the job lands the delta
+        # buckets are bloom-dirty, so probes exact-join.
+        if not st.n_discovered:
+            return self.seen.current_snapshot_id()
+        return self.seen.append(
+            st.discovered.select("url_hash", "bucket"), pack_rows=st.n_discovered
+        )
 
-                    return run
+    def _commit_log(self, st: _EpochState) -> int:
+        # lineage is PER-BUCKET: discoveries counted in the bucket they land
+        # in, new-frontier = that bucket's retry re-inserts + discoveries
+        # (ADVICE r01: global totals were stamped per row)
+        log_by_bucket = {r["bucket"]: r for r in st.log_rows}
+        buckets = sorted(set(log_by_bucket) | set(st.disc_counts) | set(st.cached_counts))
+        rows = []
+        for b in buckets:
+            r = log_by_bucket.get(b)
+            n = {k: int(r[k]) if r else 0 for k in (
+                "n_fetched", "n_stored", "n_rejected", "n_invalid", "n_retry", "n_dead")}
+            cached, disc = st.cached_counts.get(b, 0), st.disc_counts.get(b, 0)
+            rows.append((
+                st.epoch, b, n["n_fetched"] + cached, cached, n["n_stored"],
+                n["n_rejected"], n["n_invalid"], n["n_retry"], n["n_dead"],
+                disc, n["n_retry"] + disc,
+            ))
+        log = self.spark.createDataFrame(rows, FETCH_LOG_DDL)
+        return self.fetch_log.append(log, pack_rows=len(buckets))
 
-                f_store = pool.submit(_timed_early("store", store_task))
-                f_host = pool.submit(_timed_early("host", host_task))
-                f_order = pool.submit(_timed_early("order", order_task))
-                # the frontier MOR tombstone needs only the batch keys — write
-                # its files now, overlapped with link expansion, so the commit
-                # tail keeps just the insert write + manifest flip (the dirs
-                # are inert until the manifest references them; a failed epoch
-                # leaves orphans for the compaction GC)
-                if hasattr(self.frontier, "prepare_tombstone"):
-                    f_tomb = pool.submit(
-                        _timed_early(
-                            "tombstone",
-                            lambda: self.frontier.prepare_tombstone(
-                                batch.select("url_hash", "bucket"), "url_hash",
-                                pack_rows=int(n_batch),
-                            ),
-                        )
-                    )
-                else:  # storage backend without the pre-write seam
-                    f_tomb = None
+    def _commit_pending(self, st: _EpochState) -> int:
+        # scheduled re-queued keys leave the pending table whether they
+        # were cache hits or misses (misses were actually fetched)
+        if not st.n_pend:
+            return self.requeue_pending.current_snapshot_id()
+        remaining = self.requeue_pending.read(self.spark).join(
+            st.touched_pend.select("url_hash"), on="url_hash", how="left_anti"
+        )
+        return self.requeue_pending.overwrite(remaining, {"epoch": st.epoch})
 
-            # --- retries / dead letters (403/429 backoff re-queue, T4)
-            failures = results.filter(F.col("status") != 200).select("url_hash", "status")
-            fr = batch.join(failures, on="url_hash", how="inner")
-            retry = fr.filter(F.col("retry_count") < cfg.max_retries)
-            backoff = F.element_at(
-                F.array(*[F.lit(b) for b in datagen.POLITENESS["backoff_batches"]]),
-                F.least(F.col("retry_count") + 1, F.lit(len(datagen.POLITENESS["backoff_batches"]))),
-            )
-            retry_rows = (
-                retry.withColumn("not_before", (F.lit(epoch) + backoff).cast("int"))
-                .withColumn("retry_count", F.col("retry_count") + 1)
-                .select(*[c.strip().split(" ")[0] for c in FRONTIER_DDL.split(",")])
-            )
-
-            # --- link expansion -> canonicalize -> blocklist -> anti-join seen
-            if cfg.expand:
-                ok_hashes = results.filter(F.col("status") == 200).select("url_hash")
-                # admission gate FUSED into generation (pregated): blocked
-                # children never emitted, robots verdict inline on the host
-                # rank, seed dim pre-filtered once — no anti-join over the
-                # raw expansion, the epoch's largest intermediate
-                disc = self.expand_jvm(ok_hashes, pregated=True)
-                disc = with_url_identity(disc, "url", cfg.bucket_count)
-                # dedup discovered URLs on identity hash, keeping the
-                # lexicographically-smallest raw url as the representative
-                # (same pick as a row_number-over-(url asc) window, which
-                # this replaced): min_by is a partial aggregate, so the
-                # expansion's heavy duplication collapses map-side before
-                # the shuffle and nothing is sorted — the window variant
-                # shuffled every duplicate then sorted each hash group.
-                _rest = [c for c in disc.columns if c != "url_hash"]
-                disc = (
-                    disc.groupBy("url_hash")
-                    .agg(F.min_by(F.struct(*_rest), F.col("url")).alias("_r"))
-                    .select("url_hash", "_r.*")
-                )
-                if cfg.use_bloom:
-                    # partitioned bloom prefilter; exact anti-join remains the
-                    # authority for the maybe-seen slice AND for stale buckets
-                    # (snapshot under the lock: streaming ingest may add marks
-                    # concurrently, and split_new iterates the set)
-                    with self._bloom_lock:
-                        stale = set(self._bloom_dirty)
-                    new_urls = self.seen_bloom.split_new(
-                        spark, disc, self.seen, stale_buckets=stale
-                    )
-                else:
-                    seen_df = self.seen.read(spark).select("url_hash")
-                    new_urls = disc.join(seen_df, on="url_hash", how="left_anti")
-                discovered = (
-                    new_urls.withColumn(
-                        "priority",
-                        (F.pmod(F.col("url_hash"), F.lit(1_000_000)) / 1_000_000.0),
-                    )
-                    .withColumn("discovered_at", F.lit(_epoch_discovery_ts(epoch)))
-                    .withColumn("category", F.lit("general"))
-                    .withColumn("language", F.lit("en"))
-                    .withColumn("retry_count", F.lit(0))
-                    .withColumn("not_before", F.lit(epoch + 1))
-                    .select(*[c.strip().split(" ")[0] for c in FRONTIER_DDL.split(",")])
-                ).cache()
-                disc_stats = discovered.groupBy("bucket").agg(F.count("*").alias("n")).collect()
-                n_discovered = sum(r["n"] for r in disc_stats)
-            else:
-                discovered = spark.createDataFrame([], FRONTIER_DDL)
-                disc_stats = []
-                n_discovered = 0
-
-            mark("expand")
-
-            # --- commit: frontier delete+insert, seen append (+ amortized bloom
-            #     rebuild), lineage append — independent tables, same pool.
-            def frontier_task():
-                # merge-on-read: the epoch's frontier update appends O(delta)
-                # rows + a tombstone key file instead of rewriting every touched
-                # bucket — at a 10^10-row frontier a COW rewrite per epoch is
-                # the commit-path bottleneck (measured ~15 s/epoch flat in the
-                # sandbox); tombstones are folded in by the periodic compact.
-                # The tombstone files were pre-written during link expansion
-                # (f_tomb) so only the insert write + manifest stay here.
-                inserts = retry_rows.unionByName(discovered)
-                tomb_dirs = f_tomb.result() if f_tomb is not None else None
-                return self.frontier.merge_delta(
-                    spark,
-                    None if tomb_dirs is not None else batch.select("url_hash", "bucket"),
-                    inserts, "url_hash",
-                    {"epoch": epoch}, mode="mor", tombstone_dirs=tomb_dirs,
-                    pack_rows=int(n_retry) + int(n_discovered),
-                    tombstone_pack_rows=int(n_batch),
-                )
-
-            def seen_task():
-                # seen append only: the bloom OR-in (add_keys) + rebuild are
-                # DEFERRED to a background thread submitted at the end of this
-                # epoch (_submit_bloom) and landed before the next epoch's
-                # split_new — the bloom's first reader. That takes the largest
-                # commit-tail item (11.6-13.7 s measured at the 4x4-core
-                # scaling leg) off the critical path; until the job lands the
-                # delta buckets are bloom-dirty, so probes exact-join.
-                return (
-                    self.seen.append(
-                        discovered.select("url_hash", "bucket"),
-                        pack_rows=int(n_discovered),
-                    )
-                    if n_discovered
-                    else self.seen.current_snapshot_id()
-                )
-
-            def log_task():
-                # lineage is PER-BUCKET: discoveries counted in the bucket they
-                # land in, new-frontier = that bucket's retry re-inserts +
-                # discoveries (ADVICE r01: global totals were stamped per row)
-                disc_by_bucket = (
-                    {r["bucket"]: int(r["n"]) for r in disc_stats} if cfg.expand else {}
-                )
-                log_by_bucket = {r["bucket"]: r for r in log_rows}
-                log = spark.createDataFrame(
-                    [
-                        (
-                            epoch, b,
-                            (int(r["n_fetched"]) if r else 0) + cached_counts.get(b, 0),
-                            cached_counts.get(b, 0),
-                            int(r["n_stored"]) if r else 0,
-                            int(r["n_rejected"]) if r else 0,
-                            int(r["n_invalid"]) if r else 0,
-                            int(r["n_retry"]) if r else 0,
-                            int(r["n_dead"]) if r else 0,
-                            disc_by_bucket.get(b, 0),
-                            (int(r["n_retry"]) if r else 0) + disc_by_bucket.get(b, 0),
-                        )
-                        for b in sorted(
-                            set(log_by_bucket) | set(disc_by_bucket) | set(cached_counts)
-                        )
-                        for r in [log_by_bucket.get(b)]
-                    ],
-                    FETCH_LOG_DDL,
-                )
-                return self.fetch_log.append(
-                    log,
-                    pack_rows=len(
-                        set(log_by_bucket) | set(disc_by_bucket) | set(cached_counts)
-                    ),
-                )
-
-            def pending_task():
-                # scheduled re-queued keys leave the pending table whether they
-                # were cache hits or misses (misses were actually fetched)
-                if touched_pend is None or not n_pend:
-                    return self.requeue_pending.current_snapshot_id()
-                remaining = self.requeue_pending.read(spark).join(
-                    touched_pend.select("url_hash"), on="url_hash", how="left_anti"
-                )
-                return self.requeue_pending.overwrite(remaining, {"epoch": epoch})
-
-            task_secs: dict[str, float] = {}
-
-            def timed(name, fn):
-                def run():
-                    t0 = _time.time()
-                    spark.sparkContext.setLocalProperty(
-                        "spark.scheduler.pool", f"commit-{name}"
-                    )
-                    try:
-                        return fn()
-                    finally:
-                        spark.sparkContext.setLocalProperty(
-                            "spark.scheduler.pool", None
-                        )
-                        task_secs[name] = round(_time.time() - t0, 2)
-
-                return run
-
-            if pool:
-                f_frontier = pool.submit(timed("frontier", frontier_task))
-                f_seen = pool.submit(timed("seen", seen_task))
-                f_log = pool.submit(timed("log", log_task))
-                f_pend = pool.submit(timed("pending", pending_task))
-                store_id = f_store.result()
-                host_id = f_host.result()
-                order_id = f_order.result()
-                frontier_id = f_frontier.result()
-                seen_id = f_seen.result()
-                log_id = f_log.result()
-                pend_id = f_pend.result()
-            else:
-                store_id = timed("store", store_task)()
-                host_id = timed("host", host_task)()
-                order_id = timed("order", order_task)()
-                frontier_id = timed("frontier", frontier_task)()
-                seen_id = timed("seen", seen_task)()
-                log_id = timed("log", log_task)()
-                pend_id = timed("pending", pending_task)()
-        finally:
-            # on any failure in scheduling, expansion, or a commit
-            # task, wait out in-flight commit threads before
-            # unwinding — otherwise background threads keep flipping
-            # table pointers while the epoch is already recovering
-            # (ADVICE r02: the pool used to be guarded only from the
-            # second submit wave onward)
-            if pool:
-                pool.shutdown(wait=True)
-        if profile and task_secs:
-            print(f"[profile] commit tasks: {task_secs}", flush=True)
-        mark("parallel_commit")
+    def _maintain(self, st: _EpochState, snapshots: dict[str, int]) -> None:
+        """Checkpoint the epoch, hand the bloom off, compact."""
         # advance the packed-commit size bounds past this epoch's appends
         if self._seen_rows_est is not None:
-            self._seen_rows_est += int(n_discovered)
+            self._seen_rows_est += st.n_discovered
         if self._store_rows_bound is not None:
-            self._store_rows_bound += int(n_stored_total)
+            self._store_rows_bound += st.n_stored
         # the seen table now holds this epoch's keys but the bloom does not:
         # mark the delta buckets stale BEFORE checkpointing so a resume from
         # this checkpoint exact-joins them until the deferred job (or the
-        # next engine's first maintenance pass) refreshes them
-        disc_counts = {r["bucket"]: int(r["n"]) for r in disc_stats}
-        own_token: dict[int, int] = {}
-        if cfg.use_bloom and disc_counts:
-            # own_only: buckets already dirty (stream marks, carryover) get
-            # no clear token — add_keys may only clear marks it caused
-            own_token = self._mark_bloom_dirty(disc_counts, own_only=True)
-        self._checkpoint(
-            epoch,
-            {
-                "frontier": frontier_id,
-                "seen": seen_id,
-                "store": store_id,
-                "host_state": host_id,
-                "fetch_log": log_id,
-                "crawl_order": order_id,
-                "requeue_pending": pend_id,
-            },
-        )
+        # next engine's first maintenance pass) refreshes them. own_only:
+        # buckets already dirty (stream marks, carryover) get no clear
+        # token — add_keys may only clear marks it caused
+        own_token = self._mark_bloom_dirty(st.disc_counts, own_only=True)
+        self._checkpoint(st.epoch, snapshots)
         # launch the deferred bloom maintenance AFTER the checkpoint (so the
         # recorded (bloom pointer, dirty set) pair stays conservative) but
         # BEFORE the compactions below: there is no data dependency
@@ -1496,75 +1396,38 @@ class CrawlEngine:
         # otherwise overlaps the NEXT epoch's select+fetch and is awaited
         # before split_new reads the bloom. `discovered` stays cached until
         # the job lands (_await_bloom unpersists it).
-        handed_off = False
-        if cfg.use_bloom and (disc_counts or self._bloom_dirty):
-            self._submit_bloom(
-                discovered if n_discovered else None, disc_counts, own_token
-            )
-            handed_off = n_discovered > 0
-        if cfg.expand and not handed_off:
-            discovered.unpersist()
+        self._submit_bloom(
+            st.discovered if st.n_discovered else None, st.disc_counts, own_token
+        )
+        if not st.n_discovered:
+            st.discovered.unpersist()
 
         # bound read amplification on the append-only seen table and fold
         # the frontier's MOR tombstones back into data files; after a
         # compaction, GC manifests + unreferenced data dirs so a long drain
         # doesn't grow disk without bound (the checkpointed snapshot is
         # always in the kept window, so torn-epoch rollback still works).
-        # The two tables are independent — compact them as concurrent jobs
+        # The tables are independent — compact them as concurrent jobs
         # (guide §2.6: overlap independent jobs to back-fill the tail).
-        compact_seen = self.seen.max_dirs_per_bucket() > 6
-        compact_frontier = self.frontier.max_dirs_per_bucket() > 6
-        if compact_seen and compact_frontier:
-            from concurrent.futures import ThreadPoolExecutor as _TPE
-
-            with _TPE(max_workers=2, thread_name_prefix="compact") as cp:
-                fs = cp.submit(
-                    self.seen.compact, spark, {"epoch": epoch},
-                    pack_rows=self._seen_rows_est,
-                )
-                ff = cp.submit(self.frontier.compact, spark, {"epoch": epoch})
-                fs.result(), ff.result()
-            self.seen.expire_snapshots(keep_last=8)
-            self.frontier.expire_snapshots(keep_last=8)
-        elif compact_seen:
-            self.seen.compact(
-                spark, {"epoch": epoch}, pack_rows=self._seen_rows_est
-            )
-            self.seen.expire_snapshots(keep_last=8)
-        elif compact_frontier:
-            self.frontier.compact(spark, {"epoch": epoch})
-            self.frontier.expire_snapshots(keep_last=8)
+        due = [t for t in (self.seen, self.frontier) if t.max_dirs_per_bucket() > 6]
+        if due:
+            with ThreadPoolExecutor(max_workers=2, thread_name_prefix="compact") as cp:
+                futures = [
+                    cp.submit(
+                        t.compact, self.spark, {"epoch": st.epoch},
+                        pack_rows=self._seen_rows_est if t is self.seen else None,
+                    )
+                    for t in due
+                ]
+                for f in futures:
+                    f.result()
+            for t in due:
+                t.expire_snapshots(keep_last=8)
 
         # advance the driver-side frontier size estimate (exact: the epoch
         # removed the batch and re-inserted retries + discoveries)
         if self._frontier_est is not None:
-            self._frontier_est += n_retry + n_discovered - int(n_batch)
-
-        if profile:
-            print(f"[profile] epoch {epoch}: " + ", ".join(f"{n}={s}s" for n, s in marks), flush=True)
-        self._last_epoch_marks = marks
-        from .. import tablelib as _tl
-
-        stats = {
-            "epoch": epoch,
-            "fetched": int(n_batch),
-            "cached": int(n_cached_total),
-            "stored": int(n_stored_total),
-            "discovered": int(n_discovered),
-            "dead": int(n_dead),
-            # driver-resident commit-protocol time this epoch (manifest
-            # fsyncs + pointer flips + checkpoint) — the non-distributable
-            # part of the commit path; design target < 1 s
-            "driver_commit_s": round(_tl.take_driver_commit_seconds(), 3),
-            "done": False,
-        }
-        batch.unpersist()
-        results.unpersist()
-        if hits is not None:
-            hits.unpersist()
-        if touched_pend is not None:
-            touched_pend.unpersist()
-        return stats
+            self._frontier_est += st.n_retry + st.n_discovered - st.n_batch
 
     # -------------------------------------------------------------- drive
 

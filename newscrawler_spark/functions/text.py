@@ -36,17 +36,18 @@ def keyword_predicate(keywords: list[str], cols: list[str]) -> Column:
     Per keyword: `\\b<kw>\\b` (the reference uses Postgres `\\y`,
     main.py:271-294), OR-ed across columns, AND-ed across keywords.
 
-    For plain alphanumeric keywords the regex is guarded by a cheap
+    For plain ASCII alphanumeric keywords the regex is guarded by a cheap
     case-insensitive substring containment: ``\\b<kw>\\b`` can only match
     where ``lower(col)`` contains ``lower(kw)``, so the AND short-circuits
     the Java regex engine on the (typically vast) majority of rows that
     cannot match — same rows returned, a fraction of the per-row cost on a
-    full-corpus scan. Keywords with regex metacharacters skip the guard.
+    full-corpus scan. Keywords with regex metacharacters skip the guard, and
+    so do non-ASCII ones, where Python's and Java's lower-casing can disagree.
     """
     def col_pred(c: str, kw: str) -> Column:
         pat = r"(?i)\b" + kw + r"\b"
         rx = F.col(c).rlike(pat)
-        if kw.isalnum():
+        if kw.isascii() and kw.isalnum():
             return F.lower(F.col(c)).contains(kw.lower()) & rx
         return rx
 

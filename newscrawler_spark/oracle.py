@@ -117,7 +117,7 @@ class OracleCrawl:
         for seq, r in enumerate(taken, start=1):
             self.res.order.append((epoch, seq, r.url_hash))
             del self.frontier[r.url_hash]
-            if getattr(cfg, "cache_aside", True) and r.url_hash in self.res.store:
+            if r.url_hash in self.res.store:
                 # cache-aside: served from the store — no HTTP, no decode,
                 # no expansion (article_extractor.py:419-433)
                 self.res.store[r.url_hash]["last_epoch"] = epoch

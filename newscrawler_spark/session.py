@@ -83,14 +83,10 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "snappy")
     )
-    # Scheduler mode (BENCH.md §2.4c A/B): FAIR was hypothesized to help the
-    # six concurrent commit jobs share slots, but the interleaved 8-leg A/B
-    # measured it 9–13% SLOWER end-to-end (mean 909.6 vs 998.8 URLs/s), with
-    # the loss concentrated in the long decode/fetch stage — FIFO stays the
-    # default; SPARK_GRAFT_SCHEDULER=FAIR remains available as an override.
-    sched = os.environ.get("SPARK_GRAFT_SCHEDULER", "").upper()
-    if sched in ("FAIR", "FIFO"):
-        builder = builder.config("spark.scheduler.mode", sched)
+    # Scheduler mode stays Spark's default FIFO (BENCH.md §2.4c A/B): FAIR
+    # was hypothesized to help the concurrent commit jobs share slots, but
+    # the interleaved 8-leg A/B measured it 9–13% SLOWER end-to-end (mean
+    # 909.6 vs 998.8 URLs/s), with the loss in the long decode/fetch stage.
     # spark.locality.wait=0 is the default: Spark's 3 s wait idles free
     # slots waiting for a cache-local executor — a real cost for the
     # expand window and commit tail's many tiny cached-input jobs (the same
@@ -125,10 +121,10 @@ def warm_engine(spark: SparkSession | None = None) -> bool:
     NOTHING from any input dataset and materializes no reusable result —
     every query still computes from its parquet inputs — so repeated
     invocations are cheap no-ops and the warmup can never leak data or
-    results across runs. Disable with SPARK_GRAFT_NO_WARM=1.
+    results across runs. Callers run it in their untimed setup.
     """
     spark = spark or SparkSession.getActiveSession()
-    if spark is None or os.environ.get("SPARK_GRAFT_NO_WARM"):
+    if spark is None:
         return False
     app_id = spark.sparkContext.applicationId
     if app_id in _warmed_app_ids:

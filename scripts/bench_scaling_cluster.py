@@ -29,7 +29,7 @@ import sys
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 REPO = os.path.dirname(HERE)
-RUNNER = os.path.join(HERE, "bench_scaling_final.py")
+RUNNER = os.path.join(HERE, "bench_scaling_workload.py")
 
 # Per-executor shape is identical across the pair (scaling OUT, like adding
 # nodes). Default 4 cores/executor; SCALING_EXEC_CORES overrides — e.g. 2 for
@@ -47,7 +47,6 @@ def run(n_exec: int, mult: int) -> dict:
     env["SPARK_GRAFT_SCALE_MULT"] = str(mult)
     env["SPARK_GRAFT_IMG_SIZES"] = "256"
     env["SPARK_GRAFT_ARROW_BATCH"] = "128"
-    env["CRAWL_PROFILE"] = "1"  # per-epoch phase marks -> leg log (residue split)
     env["PYTHONPATH"] = REPO + os.pathsep + env.get("PYTHONPATH", "")
     cores_total = n_exec * EXEC_CORES
     out = subprocess.run(

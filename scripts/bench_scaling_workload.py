@@ -1,7 +1,15 @@
-"""Shared workload definition + single-level runner for the scaling benches."""
+"""Scaling workload definition + single-level runner.
+
+    python scripts/bench_scaling_workload.py --run N
+
+runs one drain at N cores (or on $SPARK_MASTER) and prints one JSON line:
+throughput, driver commit seconds and the per-phase seconds summed over the
+epochs. scripts/bench_scaling_cluster.py runs it once per leg.
+"""
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 import time
@@ -68,10 +76,13 @@ def run_level(cores: int) -> dict:
         t0 = time.time()
         fetched = 0
         driver_commit = 0.0
+        phases: dict[str, float] = {}
         for e in range(WORKLOAD["epochs"]):
             st = eng.run_epoch(e)
             fetched += st["fetched"]
             driver_commit += st.get("driver_commit_s", 0.0)
+            for name, sec in eng._last_epoch_marks:
+                phases[name] = round(phases.get(name, 0.0) + sec, 2)
         # deferred bloom maintenance of the last epoch lands inside the timer
         eng._await_bloom()
         wall = time.time() - t0
@@ -82,7 +93,14 @@ def run_level(cores: int) -> dict:
             "urls": fetched,
             "urls_per_sec": round(fetched / wall, 2),
             "driver_commit_sec": round(driver_commit, 3),
+            "phases_sec": phases,
         }
     finally:
         spark.stop()
         shutil.rmtree(root, ignore_errors=True)
+
+
+if __name__ == "__main__":
+    if len(sys.argv) != 3 or sys.argv[1] != "--run":
+        sys.exit("usage: bench_scaling_workload.py --run CORES")
+    print(json.dumps(run_level(int(sys.argv[2]))))

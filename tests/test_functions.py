@@ -486,3 +486,25 @@ def test_ann_multiprobe_finds_planted_near_duplicates(spark):
         top = SIM.ann_multiprobe_topk(idx, "embedding", q, k=1, bits=8, n_flip=2).collect()
         assert top and top[0]["vec_id"] == vid
     idx.unpersist()
+
+
+def test_keyword_predicate_non_ascii_keyword_skips_guard(spark):
+    """A non-ASCII keyword gets the plain regex: Python's and Java's
+    lower-casing can disagree beyond ASCII, so only ASCII keywords get the
+    substring guard."""
+    kw = "Straße"
+    df = spark.createDataFrame(
+        [(1, "die Straße ist lang"), (2, "eine straße"), (3, "STRASSE"),
+         (4, "Straßenbahn")],
+        "id long, t string",
+    )
+    rx = F.col("t").rlike(r"(?i)\b" + kw + r"\b")
+    pred = T.keyword_predicate([kw], ["t"])
+    assert str(pred) == str(rx)
+    got = sorted(r["id"] for r in df.filter(pred).collect())
+    assert got == sorted(r["id"] for r in df.filter(rx).collect())
+    assert got == [1, 2]
+    # an ASCII keyword keeps its guard
+    assert str(T.keyword_predicate(["spark"], ["t"])) != str(
+        F.col("t").rlike(r"(?i)\bspark\b")
+    )

@@ -55,11 +55,8 @@ def _submit(zpath: str, root: str, epochs: int) -> list[dict]:
     # Strip the checkout from the executor workers' import path: with
     # PYTHONPATH unset, the pickled UDF closures that reference
     # newscrawler_spark modules can only resolve on executors via the
-    # --py-files zip — which is the claim under test. Also strip debug vars
-    # that would add extra stdout lines the JSON scrape below could trip on
-    # (ADVICE r05: CRAWL_PROFILE prints are not JSON but cheap to exclude).
-    for var in ("PYTHONPATH", "CRAWL_PROFILE"):
-        env.pop(var, None)
+    # --py-files zip — which is the claim under test.
+    env.pop("PYTHONPATH", None)
     cmd = [
         SPARK_SUBMIT,
         "--master", "local-cluster[2,2,3072]",
