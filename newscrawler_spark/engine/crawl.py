@@ -1134,25 +1134,22 @@ class CrawlEngine:
 
     def _submit_early_commits(
         self, st: _EpochState, pool: ThreadPoolExecutor
-    ) -> dict[str, Future | None]:
-        early: dict[str, Future | None] = {
-            "store": pool.submit(self._commit_store, st),
-            "host_state": pool.submit(self._commit_host, st),
-            "crawl_order": pool.submit(self._commit_order, st),
-            "tombstone": None,  # storage backend without the pre-write seam
-        }
+    ) -> dict[str, Future]:
         # the frontier MOR tombstone needs only the batch keys — write its
         # files now, overlapped with link expansion, so the commit tail
         # keeps just the insert write + manifest flip (the dirs are inert
         # until the manifest references them; a failed epoch leaves
         # orphans for the compaction GC)
-        if hasattr(self.frontier, "prepare_tombstone"):
-            early["tombstone"] = pool.submit(
+        return {
+            "store": pool.submit(self._commit_store, st),
+            "host_state": pool.submit(self._commit_host, st),
+            "crawl_order": pool.submit(self._commit_order, st),
+            "tombstone": pool.submit(
                 self.frontier.prepare_tombstone,
                 st.batch.select("url_hash", "bucket"), "url_hash",
                 pack_rows=st.n_batch,
-            )
-        return early
+            ),
+        }
 
     def _expand(self, st: _EpochState) -> None:
         cfg, spark, epoch = self.cfg, self.spark, st.epoch
@@ -1307,7 +1304,7 @@ class CrawlEngine:
             pack_rows=st.n_batch,
         )
 
-    def _commit_frontier(self, st: _EpochState, f_tomb: Future | None) -> int:
+    def _commit_frontier(self, st: _EpochState, f_tomb: Future) -> int:
         # merge-on-read: the epoch's frontier update appends O(delta) rows
         # + a tombstone key file instead of rewriting every touched bucket —
         # at a 10^10-row frontier a COW rewrite per epoch is the commit-path
@@ -1315,14 +1312,10 @@ class CrawlEngine:
         # are folded in by the periodic compact. The tombstone files were
         # pre-written during link expansion (f_tomb) so only the insert
         # write + manifest stay here.
-        tomb_dirs = f_tomb.result() if f_tomb is not None else None
         return self.frontier.merge_delta(
-            self.spark,
-            None if tomb_dirs is not None else st.batch.select("url_hash", "bucket"),
+            self.spark, f_tomb.result(),
             st.retry_rows.unionByName(st.discovered), "url_hash",
-            {"epoch": st.epoch}, mode="mor", tombstone_dirs=tomb_dirs,
-            pack_rows=st.n_retry + st.n_discovered,
-            tombstone_pack_rows=st.n_batch,
+            {"epoch": st.epoch}, pack_rows=st.n_retry + st.n_discovered,
         )
 
     def _commit_seen(self, st: _EpochState) -> int:

@@ -304,7 +304,7 @@ class SeenBloom:
         meta = self._meta(spark)
         meta.update({b: (_m_for(BUILD_HEADROOM * n), n) for b, n in counts.items()})
         return self.table.merge_upsert(
-            spark, dense, "bucket", set_pointer=True,
+            spark, dense, "bucket",
             summary=self._meta_summary(meta),
             pack_rows=self._pack_hint(meta),
         )

@@ -71,14 +71,14 @@ class IcebergTable:
     - snapshot ids are Iceberg's (random longs, not dense integers); 0 means
       "empty, pre-first-commit" and cannot be rolled back to — the engine
       only rolls back to ids it checkpointed, which are real snapshots;
-    - ``pack_rows``/``tombstone_pack_rows`` (the parquet twin's packed
-      small-delta commit hints) are accepted on every writer and ignored:
-      Iceberg sizes output files itself (write.target-file-size-bytes) and
-      its writers already avoid the one-file-per-partition explosion the
-      twin's packing works around;
-    - merge-on-read is a TABLE PROPERTY (write.delete.mode=merge-on-read)
-      rather than a per-call mode: ``merge_delta(mode=...)`` is accepted and
-      ignored so call sites stay identical;
+    - ``pack_rows`` (the parquet twin's packed small-delta commit hint) is
+      accepted on every writer and ignored: Iceberg sizes output files
+      itself (write.target-file-size-bytes) and its writers already avoid
+      the one-file-per-partition explosion the twin's packing works around;
+    - merge-on-read is a TABLE PROPERTY (write.delete.mode=merge-on-read),
+      and Iceberg writes its own delete files inside MERGE, so
+      ``prepare_tombstone`` returns the lazy key DataFrame that
+      ``merge_delta`` deletes by;
     - compaction/expiry go through the documented system procedures.
     """
 
@@ -175,13 +175,13 @@ class IcebergTable:
     # --------------------------------------------------------------- writes
 
     def append(self, df: DataFrame, summary: dict | None = None,
-               set_pointer: bool = True, pack_rows: int | None = None) -> int:
+               pack_rows: int | None = None) -> int:
         with self._commit_lock:
             df.writeTo(self.full).append()
             return self.current_snapshot_id()
 
     def overwrite(self, df: DataFrame, summary: dict | None = None,
-                  set_pointer: bool = True, pack_rows: int | None = None) -> int:
+                  pack_rows: int | None = None) -> int:
         with self._commit_lock:
             df.writeTo(self.full).overwrite(F.lit(True))
             return self.current_snapshot_id()
@@ -202,7 +202,6 @@ class IcebergTable:
         delta: DataFrame,
         key: str,
         summary: dict | None = None,
-        set_pointer: bool = True,
         touched: list[int] | None = None,
         preserve_cols: list[str] | None = None,
         pack_rows: int | None = None,
@@ -220,31 +219,30 @@ class IcebergTable:
             self._merge(delta, key, matched)
             return self.current_snapshot_id()
 
+    def prepare_tombstone(
+        self, delete_keys: DataFrame, key: str, pack_rows: int | None = None
+    ) -> DataFrame:
+        """The keys a later ``merge_delta`` deletes, as a lazy DataFrame:
+        nothing is written here, because Iceberg writes its own delete
+        files inside MERGE."""
+        return delete_keys.select(key)
+
     def merge_delta(
         self,
         spark: SparkSession,
-        delete_keys: DataFrame | None,
+        tombstones: DataFrame | None,
         inserts: DataFrame | None,
         key: str,
         summary: dict | None = None,
-        set_pointer: bool = True,
-        touched: list[int] | None = None,
-        mode: str = "cow",
-        tombstone_dirs: dict | None = None,
         pack_rows: int | None = None,
-        tombstone_pack_rows: int | None = None,
     ) -> int:
         """Delete by key then insert — same-commit insert beats delete, the
-        parquet twin's MERGE semantics. ``mode`` is accepted for interface
-        parity; MOR vs COW is the table's write.delete.mode property.
-        ``tombstone_dirs`` (the parquet twin's pre-written tombstone seam) is
-        accepted for parity but unused: Iceberg writes its own delete files
-        inside MERGE, and the engine only pre-writes when the table exposes
-        ``prepare_tombstone`` (it checks with hasattr)."""
+        parquet twin's MERGE semantics. ``tombstones`` is what
+        ``prepare_tombstone`` returned (or None)."""
         with self._commit_lock:
-            if delete_keys is not None and delete_keys.take(1):
+            if tombstones is not None and tombstones.take(1):
                 view = f"_del_{self.name}"
-                delete_keys.select(key).createOrReplaceTempView(view)
+                tombstones.createOrReplaceTempView(view)
                 self.spark.sql(
                     f"MERGE INTO {self.full} t USING {view} s "
                     f"ON t.{key} = s.{key} WHEN MATCHED THEN DELETE"

@@ -94,9 +94,9 @@ def get_spark(
     # expand phase at 61.2 vs 75.2 s). On the deployment side the scan
     # source is an object store (no data locality to wait for), which is
     # the standard setting for S3/GCS-backed clusters; HDFS-local
-    # deployments can restore the wait via SPARK_GRAFT_LOCALITY_WAIT=3s.
-    lw = os.environ.get("SPARK_GRAFT_LOCALITY_WAIT", "") or "0"
-    builder = builder.config("spark.locality.wait", lw)
+    # deployments can restore the wait via
+    # extra_conf={"spark.locality.wait": "3s"}.
+    builder = builder.config("spark.locality.wait", "0")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -8,9 +8,13 @@ contract on plain parquet + JSON manifests:
 - every commit produces a new immutable snapshot (``manifests/v<id>.json``)
   listing, **per bucket**, the parquet directories that make up the table;
 - the current-version pointer is flipped atomically (``os.replace``);
-- ``merge_upsert`` is partition-level copy-on-write: only the buckets
+- ``merge_upsert`` is partition-level copy-on-write (COW): only the buckets
   present in the delta are rewritten, untouched buckets carry their old
   data directories forward by reference — exactly Iceberg's COW granularity;
+- ``merge_delta`` is merge-on-read (MOR): the commit appends the insert rows
+  and references a tombstone key-file set written by ``prepare_tombstone``
+  (Iceberg equality deletes); readers apply the tombstones and ``compact``
+  folds them back into data files;
 - ``read(..., buckets=[...])`` prunes at the manifest level (the analog of
   Iceberg partition pruning), and ``read(..., snapshot_id=n)`` time-travels.
 
@@ -38,6 +42,7 @@ from __future__ import annotations
 
 import functools
 import json
+import logging
 import os
 import shutil
 import tempfile
@@ -49,6 +54,8 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+log = logging.getLogger(__name__)
 
 BUCKET_COL = "bucket"
 _PB = "pbucket"
@@ -64,9 +71,8 @@ _PB = "pbucket"
 # millions of rows and keep the per-bucket layout; packing engages for
 # small tables and small tail deltas at ANY scale — the row bound is a
 # proxy for "the whole delta fits in a fraction of one target-size file"
-# (64k rows x ~100 B ≈ 6 MB << the 64-512 MB target). Override with
-# SPARK_GRAFT_PACK_ROWS (0 disables packing).
-PACK_ROWS_DEFAULT = 65536
+# (64k rows x ~100 B ≈ 6 MB << the 64-512 MB target).
+PACK_ROWS = 65536
 _PACKED_MARK = "-packed"
 
 
@@ -171,7 +177,8 @@ def _locked(fn):
 
 
 class SnapshotTable:
-    """One bucketed table with snapshot isolation and COW merges."""
+    """One bucketed table with snapshot isolation, COW upserts and MOR
+    delete+insert merges."""
 
     def __init__(
         self,
@@ -190,9 +197,6 @@ class SnapshotTable:
         # columns whose per-dir min/max zone maps are kept in the manifest
         # (numeric only); enables bucket_stats() pruning for readers
         self.stats_cols = list(stats_cols or [])
-        self.pack_rows_max = int(
-            os.environ.get("SPARK_GRAFT_PACK_ROWS", str(PACK_ROWS_DEFAULT))
-        )
         # per-bucket stats for freshly written packed dirs, keyed by rel
         # dir, consumed by the next _commit's dir_stats assembly
         self._packed_pb: dict[str, dict] = {}
@@ -319,22 +323,18 @@ class SnapshotTable:
         """Write df partitioned by bucket; return {bucket: [reldir]}.
 
         ``pack_rows``: caller's (upper-bound) row-count hint. When it is at
-        or under ``pack_rows_max`` the whole delta is written as ONE shared
-        dir/file registered under every bucket present (see PACK_ROWS_*
+        or under ``PACK_ROWS`` the whole delta is written as ONE shared
+        dir/file registered under every bucket present (see PACK_ROWS
         rationale at module top). ``repartition(1)`` (not coalesce: coalesce
         would collapse the parallelism of the producing plan) bounds the
         write to a single target-size-fraction file.
         """
-        if (
-            self.partitioned
-            and pack_rows is not None
-            and 0 < self.pack_rows_max
-            and pack_rows <= self.pack_rows_max
-        ):
+        packed = pack_rows is not None and pack_rows <= PACK_ROWS
+        if self.partitioned and packed:
             rel = os.path.join("data", f"snap-{uuid.uuid4().hex[:12]}-{op}{_PACKED_MARK}")
             out = os.path.join(self.dir, rel)
             df.repartition(1).write.mode("overwrite").parquet(out)
-            present, pb = self._packed_readback(out)
+            present, pb = self._packed_readback(out, pack_rows)
             if self.stats_cols:
                 self._packed_pb[rel] = pb
             return {str(b): [rel] for b in present}
@@ -345,11 +345,7 @@ class SnapshotTable:
             # threshold delta has no business writing one ~KB file per
             # shuffle partition (host_state/fetch_log/crawl_order wrote
             # 32-64 tiny files per epoch commit)
-            if (
-                pack_rows is not None
-                and 0 < self.pack_rows_max
-                and pack_rows <= self.pack_rows_max
-            ):
+            if packed:
                 df = df.repartition(1)
             df.write.mode("overwrite").parquet(out)
             return {"all": [rel]}
@@ -373,7 +369,9 @@ class SnapshotTable:
     def next_sid(self) -> int:
         return max(self.history()) + 1
 
-    def _packed_readback(self, out_abs: str) -> tuple[list[int], dict]:
+    def _packed_readback(
+        self, out_abs: str, pack_rows: int
+    ) -> tuple[list[int], dict]:
         """Driver-side per-bucket census of a freshly written packed dir.
 
         A packed dir spans buckets, so the manifest needs (a) which buckets
@@ -381,9 +379,11 @@ class SnapshotTable:
         dir's footer stats cover the whole file and would otherwise
         overcount every bucket's row bound, which `_frontier_scan_buckets`
         rule 2 relies on as a LOWER bound (unsound pruning). The dir is by
-        definition small (<= pack_rows_max rows), so reading the bucket +
+        definition small (<= PACK_ROWS rows), so reading the bucket +
         stats columns with pyarrow on the driver costs ~ms and is counted
-        as driver commit time."""
+        as driver commit time. A row count above the caller's ``pack_rows``
+        hint is logged: the file is still correct, but an under-stated hint
+        can pack a delta far past PACK_ROWS into one file and one task."""
         global _driver_commit_ns
         import pyarrow.parquet as pq
 
@@ -432,6 +432,11 @@ class SnapshotTable:
                 lo[c] = vlo
                 hi[c] = vhi
             pb[str(b)] = {"n": g[f"{BUCKET_COL}_count"][i], "lo": lo, "hi": hi}
+        if tbl.num_rows > pack_rows:
+            log.warning(
+                "%s: packed write of %d rows exceeds the pack_rows hint %d",
+                self.name, tbl.num_rows, pack_rows,
+            )
         with _driver_commit_lock:
             _driver_commit_ns += time.perf_counter_ns() - t0
         return sorted(int(b) for b in pb), pb
@@ -552,7 +557,6 @@ class SnapshotTable:
         entries: dict[str, list[str]],
         op: str,
         summary: dict[str, Any],
-        set_pointer: bool = True,
         deletes: dict[str, list[str]] | None = None,
         dir_seq: dict[str, int] | None = None,
     ) -> int:
@@ -588,8 +592,7 @@ class SnapshotTable:
             sid, parent, op, entries, summary, deletes, dir_seq, dir_stats
         )
         self._write_manifest(snap)
-        if set_pointer:
-            self.set_current(sid)
+        self.set_current(sid)
         return sid
 
     @_locked
@@ -597,7 +600,6 @@ class SnapshotTable:
         self,
         df: DataFrame,
         summary: dict | None = None,
-        set_pointer: bool = True,
         pack_rows: int | None = None,
     ) -> int:
         sid = self.next_sid()
@@ -610,7 +612,7 @@ class SnapshotTable:
             for d in dirs:
                 dir_seq[d] = sid
         return self._commit(
-            merged, "append", summary or {}, set_pointer,
+            merged, "append", summary or {},
             deletes={b: list(d) for b, d in cur.deletes.items()}, dir_seq=dir_seq,
         )
 
@@ -619,11 +621,10 @@ class SnapshotTable:
         self,
         df: DataFrame,
         summary: dict | None = None,
-        set_pointer: bool = True,
         pack_rows: int | None = None,
     ) -> int:
         new = self._write_data(df, "overwrite", pack_rows=pack_rows)
-        return self._commit(new, "overwrite", summary or {}, set_pointer)
+        return self._commit(new, "overwrite", summary or {})
 
     @_locked
     def merge_upsert(
@@ -632,7 +633,6 @@ class SnapshotTable:
         delta: DataFrame,
         key: str,
         summary: dict | None = None,
-        set_pointer: bool = True,
         touched: list[int] | None = None,
         preserve_cols: list[str] | None = None,
         pack_rows: int | None = None,
@@ -660,7 +660,7 @@ class SnapshotTable:
                 kept = current.join(delta.select(key).distinct(), on=key, how="left_anti")
                 delta = kept.unionByName(delta)
             new_entries = self._write_data(delta, "merge", pack_rows=pack_rows)
-            return self._commit(new_entries, "merge", summary or {}, set_pointer)
+            return self._commit(new_entries, "merge", summary or {})
 
         delta = delta.cache()
         if touched is None:
@@ -702,7 +702,7 @@ class SnapshotTable:
         entries = {b: d for b, d in entries.items() if d}
         delta.unpersist()
         return self._commit(
-            entries, "merge", summary or {}, set_pointer,
+            entries, "merge", summary or {},
             deletes=deletes, dir_seq=dir_seq,
         )
 
@@ -746,183 +746,59 @@ class SnapshotTable:
             out = out.withColumn(c, F.coalesce(f"__old_{c}", c)).drop(f"__old_{c}")
         return out
 
-    @_locked
-    def merge_delta(
-        self,
-        spark: SparkSession,
-        delete_keys: DataFrame | None,
-        inserts: DataFrame | None,
-        key: str,
-        summary: dict | None = None,
-        set_pointer: bool = True,
-        touched: list[int] | None = None,
-        mode: str = "cow",
-        tombstone_dirs: dict[str, list[str]] | None = None,
-        pack_rows: int | None = None,
-        tombstone_pack_rows: int | None = None,
-    ) -> int:
-        """MERGE with WHEN MATCHED DELETE + NOT MATCHED INSERT semantics.
-
-        The frontier's per-epoch update (drop fetched rows, add retries +
-        discoveries). Two physical strategies:
-
-        - ``mode="cow"``: partition-level copy-on-write — buckets touched by
-          either side are rewritten. O(touched-bucket rows) per commit.
-        - ``mode="mor"``: merge-on-read (Iceberg equality-delete analog) —
-          the commit APPENDS the insert rows and a tombstone key file;
-          nothing is rewritten, so the commit is O(epoch delta) even when
-          the table holds 10^10 rows. Readers anti-join the accumulated
-          tombstones (seq-aware: a same-commit re-insert of a deleted key
-          survives, matching MERGE delete-then-insert). ``compact()`` folds
-          tombstones back into data files.
-        """
-        if mode == "mor":
-            return self._merge_delta_mor(
-                spark, delete_keys, inserts, key, summary or {}, set_pointer,
-                tombstone_dirs=tombstone_dirs, pack_rows=pack_rows,
-                tombstone_pack_rows=tombstone_pack_rows,
-            )
-        entries = {b: list(d) for b, d in self.snapshot().entries.items()}
-        if touched is None:
-            touched = set()
-            if delete_keys is not None:
-                delete_keys = delete_keys.select(key, BUCKET_COL).cache()
-                touched |= {
-                    r[0] for r in delete_keys.select(BUCKET_COL).distinct().collect()
-                }
-            if inserts is not None:
-                inserts = inserts.cache()
-                touched |= {r[0] for r in inserts.select(BUCKET_COL).distinct().collect()}
-        else:
-            touched = set(touched)
-            if delete_keys is not None:
-                delete_keys = delete_keys.select(key, BUCKET_COL)
-        # shared packed parents: same fully-live-or-dead closure as
-        # merge_upsert (see _expand_touched_for_packed)
-        touched = set(self._expand_touched_for_packed(entries, touched))
-        have = [b for b in touched if str(b) in entries]
-        parts = []
-        if have:
-            current = self.read(spark, buckets=have)
-            if delete_keys is not None:
-                current = current.join(
-                    delete_keys.select(key).distinct(), on=key, how="left_anti"
-                )
-            parts.append(current)
-        if inserts is not None:
-            ins = inserts
-            if have:
-                ins = inserts  # inserts in untouched buckets are still new data
-            parts.append(ins)
-        if not parts:
-            return self.current_snapshot_id()
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        new_entries = self._write_data(out, "mergedelta", pack_rows=pack_rows)
-        cur = self.snapshot()
-        sid = self.next_sid()
-        deletes = {b: list(d) for b, d in cur.deletes.items()}
-        dir_seq = dict(cur.dir_seq)
-        for b in touched:
-            entries.pop(str(b), None)
-            deletes.pop(str(b), None)  # COW rewrite folds tombstones in
-        for b, dirs in new_entries.items():
-            entries[b] = dirs
-            for d in dirs:
-                dir_seq[d] = sid
-        if delete_keys is not None:
-            delete_keys.unpersist()
-        if inserts is not None:
-            inserts.unpersist()
-        return self._commit(
-            entries, "mergedelta", summary or {}, set_pointer,
-            deletes=deletes, dir_seq=dir_seq,
-        )
-
     def prepare_tombstone(
         self, delete_keys: DataFrame, key: str, pack_rows: int | None = None
     ) -> dict[str, list[str]]:
-        """Pre-write a MOR tombstone key-file set for a later
-        ``merge_delta(mode="mor", tombstone_dirs=...)``. The written dirs are
-        inert until a commit's manifest references them (a failed epoch
-        leaves orphans the compaction GC collects), so callers may overlap
-        this write with other work — the crawl engine writes the epoch's
-        tombstone during link expansion, taking it off the commit tail."""
+        """Write the MOR tombstone key-file set for a later ``merge_delta``.
+        The written dirs are inert until a commit's manifest references them
+        (a failed epoch leaves orphans the compaction GC collects), so
+        callers may overlap this write with other work — the crawl engine
+        writes the epoch's tombstone during link expansion, taking it off
+        the commit tail."""
         return self._write_data(
             delete_keys.select(key, BUCKET_COL), "mordelete", pack_rows=pack_rows
         )
 
-    def _merge_delta_mor(
+    @_locked
+    def merge_delta(
         self,
         spark: SparkSession,
-        delete_keys: DataFrame | None,
+        tombstones: dict[str, list[str]] | None,
         inserts: DataFrame | None,
         key: str,
-        summary: dict,
-        set_pointer: bool,
-        tombstone_dirs: dict[str, list[str]] | None = None,
+        summary: dict | None = None,
         pack_rows: int | None = None,
-        tombstone_pack_rows: int | None = None,
     ) -> int:
+        """MERGE with WHEN MATCHED DELETE + NOT MATCHED INSERT semantics.
+
+        The frontier's per-epoch update (drop fetched rows, add retries +
+        discoveries), as merge-on-read (Iceberg equality-delete analog):
+        ``tombstones`` is what ``prepare_tombstone`` returned for the keys
+        to delete (or None). The commit APPENDS the insert rows and
+        references the tombstone dirs; nothing is rewritten, so the commit
+        is O(epoch delta) even when the table holds 10^10 rows. Readers
+        anti-join the accumulated tombstones (seq-aware: a same-commit
+        re-insert of a deleted key survives, matching MERGE
+        delete-then-insert). ``compact()`` folds tombstones back into data
+        files.
+        """
         cur = self.snapshot()
         sid = self.next_sid()
         entries = {b: list(d) for b, d in cur.entries.items()}
         deletes = {b: list(d) for b, d in cur.deletes.items()}
         dir_seq = dict(cur.dir_seq)
-        # the insert and tombstone writes land in separate snap dirs and
-        # share no inputs — run them as concurrent Spark jobs so the MOR
-        # commit's wall time is max(write) not sum(write); all manifest
-        # bookkeeping stays on this thread after both finish
-        new: dict[str, list[str]] = {}
-        if tombstone_dirs is not None:
-            tomb = tombstone_dirs
-            if inserts is not None:
-                new = self._write_data(inserts, "morinsert", pack_rows=pack_rows)
-        elif inserts is not None and delete_keys is not None:
-            insert_res: dict = {}
-
-            def _write_inserts():
-                try:
-                    insert_res["new"] = self._write_data(
-                        inserts, "morinsert", pack_rows=pack_rows
-                    )
-                except BaseException as e:
-                    insert_res["err"] = e
-
-            th = threading.Thread(target=_write_inserts, name="mor-insert")
-            th.start()
-            tomb = self._write_data(
-                delete_keys.select(key, BUCKET_COL), "mordelete",
-                pack_rows=tombstone_pack_rows,
-            )
-            th.join()
-            if "err" in insert_res:
-                raise insert_res["err"]
-            new = insert_res["new"]
-        else:
-            if inserts is not None:
-                new = self._write_data(inserts, "morinsert", pack_rows=pack_rows)
-            tomb = (
-                self._write_data(
-                    delete_keys.select(key, BUCKET_COL), "mordelete",
-                    pack_rows=tombstone_pack_rows,
-                )
-                if delete_keys is not None
-                else None
-            )
-        for b, dirs in new.items():
-            entries.setdefault(b, []).extend(dirs)
-            for d in dirs:
-                dir_seq[d] = sid
-        if tomb is not None:
-            for b, dirs in tomb.items():
-                deletes.setdefault(b, []).extend(dirs)
+        if inserts is not None:
+            new = self._write_data(inserts, "morinsert", pack_rows=pack_rows)
+            for b, dirs in new.items():
+                entries.setdefault(b, []).extend(dirs)
                 for d in dirs:
                     dir_seq[d] = sid
-        summary = {**summary, "mor_key": key}
+        for b, dirs in (tombstones or {}).items():
+            deletes.setdefault(b, []).extend(dirs)
+            for d in dirs:
+                dir_seq[d] = sid
         return self._commit(
-            entries, "mordelta", summary, set_pointer,
+            entries, "mordelta", {**(summary or {}), "mor_key": key},
             deletes=deletes, dir_seq=dir_seq,
         )
 

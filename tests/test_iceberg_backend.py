@@ -32,17 +32,17 @@ def test_backend_surface_parity():
     same name; the engine accepts an injected catalog."""
     needed = [
         "read", "append", "overwrite", "merge_upsert", "merge_delta",
-        "delete_where", "compact", "expire_snapshots", "is_empty",
+        "prepare_tombstone", "delete_where", "compact", "expire_snapshots", "is_empty",
         "current_snapshot_id", "set_current", "history", "max_dirs_per_bucket",
     ]
     for m in needed:
         assert callable(getattr(SnapshotTable, m)), m
         assert callable(getattr(IcebergTable, m)), m
     # keyword-compatible signatures for the calls the engine makes
-    for m in ["merge_upsert", "merge_delta"]:
+    for m in ["merge_upsert", "merge_delta", "prepare_tombstone"]:
         a = set(inspect.signature(getattr(SnapshotTable, m)).parameters)
         b = set(inspect.signature(getattr(IcebergTable, m)).parameters)
-        assert a <= b | {"summary", "set_pointer", "touched"}, (m, a - b)
+        assert a <= b | {"summary", "touched"}, (m, a - b)
     assert "catalog" in inspect.signature(CrawlEngine.__init__).parameters
     assert issubclass(IcebergCatalog, Catalog)
 
@@ -80,7 +80,7 @@ def test_iceberg_table_roundtrip(spark, ice, tmp_path):
     # merge_delta: delete 0-4, insert 100
     t.merge_delta(
         spark,
-        spark.range(0, 5).select(F.col("id").alias("k")),
+        t.prepare_tombstone(spark.range(0, 5).select(F.col("id").alias("k")), "k"),
         spark.createDataFrame([(100, "new", 0)], "k long, v string, bucket int"),
         "k",
     )

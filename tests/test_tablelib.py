@@ -1,8 +1,11 @@
 """Snapshot-table semantics: append/merge/delete, time travel, checkpoints."""
 
+import logging
+
 import pytest
 from pyspark.sql import functions as F
 
+from newscrawler_spark import tablelib
 from newscrawler_spark.tablelib import Catalog
 
 DDL = "k long, bucket int, v string"
@@ -52,9 +55,9 @@ def test_merge_upsert_rewrites_only_touched_buckets(spark, cat):
 def test_merge_delta_delete_and_insert(spark, cat):
     t = cat.table("t", DDL)
     t.append(_df(spark, [(1, 0, "a"), (2, 1, "b"), (3, 2, "c")]))
-    deletes = _df(spark, [(2, 1, "x")]).select("k", "bucket")
+    tomb = t.prepare_tombstone(_df(spark, [(2, 1, "x")]), "k")
     inserts = _df(spark, [(9, 1, "ins"), (10, 5, "new")])
-    t.merge_delta(spark, deletes, inserts, "k")
+    t.merge_delta(spark, tomb, inserts, "k")
     got = {r["k"]: r["v"] for r in t.read(spark).collect()}
     assert got == {1: "a", 3: "c", 9: "ins", 10: "new"}
 
@@ -143,11 +146,7 @@ def test_merge_delta_mor_basic_and_timetravel(spark, cat):
     t.append(_df(spark, [(1, 0, "a"), (2, 1, "b"), (3, 0, "c")]))
     pre = t.current_snapshot_id()
     t.merge_delta(
-        spark,
-        _df(spark, [(2, 1, "x")]).select("k", "bucket"),
-        None,
-        "k",
-        mode="mor",
+        spark, t.prepare_tombstone(_df(spark, [(2, 1, "x")]), "k"), None, "k"
     )
     assert {r["k"] for r in t.read(spark).collect()} == {1, 3}
     assert {r["k"] for r in t.read(spark, snapshot_id=pre).collect()} == {1, 2, 3}
@@ -162,16 +161,15 @@ def test_merge_delta_mor_delete_then_reinsert_same_commit(spark, cat):
     t.append(_df(spark, [(1, 0, "a"), (2, 1, "b"), (3, 2, "c")]))
     t.merge_delta(
         spark,
-        _df(spark, [(1, 0, "_"), (2, 1, "_")]).select("k", "bucket"),
+        t.prepare_tombstone(_df(spark, [(1, 0, "_"), (2, 1, "_")]), "k"),
         _df(spark, [(1, 0, "a-retry")]),
         "k",
-        mode="mor",
     )
     got = {r["k"]: r["v"] for r in t.read(spark).collect()}
     assert got == {1: "a-retry", 3: "c"}
     # a later delete of the re-inserted key wins again
     t.merge_delta(
-        spark, _df(spark, [(1, 0, "_")]).select("k", "bucket"), None, "k", mode="mor"
+        spark, t.prepare_tombstone(_df(spark, [(1, 0, "_")]), "k"), None, "k"
     )
     assert {r["k"] for r in t.read(spark).collect()} == {3}
 
@@ -181,10 +179,9 @@ def test_mor_compact_folds_tombstones(spark, cat):
     t.append(_df(spark, [(i, i % 4, f"v{i}") for i in range(20)]))
     t.merge_delta(
         spark,
-        _df(spark, [(i, i % 4, "_") for i in range(0, 20, 2)]).select("k", "bucket"),
+        t.prepare_tombstone(_df(spark, [(i, i % 4, "_") for i in range(0, 20, 2)]), "k"),
         _df(spark, [(100, 0, "new")]),
         "k",
-        mode="mor",
     )
     before = {r["k"] for r in t.read(spark).collect()}
     assert before == set(range(1, 20, 2)) | {100}
@@ -241,8 +238,8 @@ def test_bucket_stats_mor_tombstones_lower_bound(spark, cat):
     sddl = "k long, bucket int, v double"
     t = cat.table("t", sddl, stats_cols=["k"])
     t.append(spark.createDataFrame([(i, 0, float(i)) for i in range(10)], sddl))
-    dels = spark.createDataFrame([(0, 0, 0.0), (9, 0, 0.0)], sddl).select("k", "bucket")
-    t.merge_delta(spark, dels, None, "k", mode="mor")
+    dels = spark.createDataFrame([(0, 0, 0.0), (9, 0, 0.0)], sddl)
+    t.merge_delta(spark, t.prepare_tombstone(dels, "k"), None, "k")
     st = t.bucket_stats()
     assert st[0]["n"] == 10 and st[0]["tomb"] == 2
     assert st[0]["n"] - st[0]["tomb"] == t.read(spark).count()
@@ -260,11 +257,10 @@ def test_bucket_stats_absent_without_stats_cols(spark, cat):
 
 
 def test_merge_delta_mor_pre_written_tombstone(spark, cat):
-    """prepare_tombstone + merge_delta(tombstone_dirs=...) must be
-    semantically identical to passing delete_keys directly — including the
-    seq-aware same-commit re-insert of a deleted key (the crawl engine
-    pre-writes the epoch tombstone during link expansion to keep it off the
-    commit tail)."""
+    """A tombstone written by prepare_tombstone stays inert until
+    merge_delta references it, and keeps the seq-aware same-commit
+    re-insert of a deleted key (the crawl engine pre-writes the epoch
+    tombstone during link expansion to keep it off the commit tail)."""
     t = cat.table("t", DDL)
     t.append(_df(spark, [(1, 0, "a"), (2, 1, "b"), (3, 2, "c")]))
     tomb = t.prepare_tombstone(
@@ -273,19 +269,9 @@ def test_merge_delta_mor_pre_written_tombstone(spark, cat):
     # dirs are inert until a commit references them
     assert {r["k"] for r in t.read(spark).collect()} == {1, 2, 3}
     inserts = _df(spark, [(2, 1, "REINS"), (9, 5, "new")])
-    t.merge_delta(spark, None, inserts, "k", mode="mor", tombstone_dirs=tomb)
+    t.merge_delta(spark, tomb, inserts, "k")
     got = {r["k"]: r["v"] for r in t.read(spark).collect()}
     assert got == {1: "a", 2: "REINS", 9: "new"}
-    # twin table fed the same delta through the direct delete_keys path
-    t2 = cat.table("t2", DDL)
-    t2.append(_df(spark, [(1, 0, "a"), (2, 1, "b"), (3, 2, "c")]))
-    t2.merge_delta(
-        spark,
-        _df(spark, [(2, 1, "x"), (3, 2, "x")]).select("k", "bucket"),
-        inserts, "k", mode="mor",
-    )
-    got2 = {r["k"]: r["v"] for r in t2.read(spark).collect()}
-    assert got2 == got
 
 
 # ------------------------------------------------------------- packed commits
@@ -318,9 +304,9 @@ def test_packed_and_unpacked_dirs_mix_in_one_table(spark, cat):
     assert {r["k"] for r in t.read(spark, buckets=[0]).collect()} == {1, 3}
 
 
-def test_packed_over_threshold_falls_back_to_bucket_dirs(spark, cat):
+def test_packed_over_threshold_falls_back_to_bucket_dirs(spark, cat, monkeypatch):
+    monkeypatch.setattr(tablelib, "PACK_ROWS", 10)
     t = cat.table("t", DDL)
-    t.pack_rows_max = 10
     t.append(_df(spark, [(i, i % 3, "x") for i in range(30)]), pack_rows=30)
     dirs = {d for ds in t.snapshot().entries.values() for d in ds}
     assert not any(d.endswith("-packed") for d in dirs)
@@ -343,12 +329,11 @@ def test_packed_bucket_stats_are_exact_per_bucket(spark, cat):
 def test_packed_mor_tombstone_read_and_stats(spark, cat):
     t = cat.table("t", DDL, stats_cols=["k"])
     t.append(_df(spark, [(i, i % 2, "x") for i in range(8)]), pack_rows=8)
-    deletes = _df(spark, [(0, 0, "x"), (1, 1, "x")]).select("k", "bucket")
-    inserts = _df(spark, [(100, 0, "new")])
-    t.merge_delta(
-        spark, deletes, inserts, "k", mode="mor",
-        pack_rows=1, tombstone_pack_rows=2,
+    tomb = t.prepare_tombstone(
+        _df(spark, [(0, 0, "x"), (1, 1, "x")]), "k", pack_rows=2
     )
+    inserts = _df(spark, [(100, 0, "new")])
+    t.merge_delta(spark, tomb, inserts, "k", pack_rows=1)
     got = {r["k"] for r in t.read(spark).collect()}
     assert got == {2, 3, 4, 5, 6, 7, 100}
     # packed tombstone dirs: per-bucket tomb counts stay exact
@@ -383,10 +368,7 @@ def test_packed_prewritten_tombstone_roundtrip(spark, cat):
     assert all(
         d.endswith("-packed") for dirs in tomb.values() for d in dirs
     ) and set(tomb) == {"0", "1"}
-    t.merge_delta(
-        spark, None, _df(spark, [(9, 0, "ins")]), "k",
-        mode="mor", tombstone_dirs=tomb, pack_rows=1,
-    )
+    t.merge_delta(spark, tomb, _df(spark, [(9, 0, "ins")]), "k", pack_rows=1)
     assert {r["k"] for r in t.read(spark).collect()} == {1, 2, 4, 5, 9}
 
 
@@ -400,9 +382,23 @@ def test_packed_partial_merge_does_not_resurrect_stale_rows(spark, cat):
     rows = t.read(spark).collect()
     assert len(rows) == 3
     assert {r["k"]: r["v"] for r in rows} == {1: "a", 2: "B", 3: "c"}
-    # same through merge_delta COW
-    t.merge_delta(spark, _df(spark, [(3, 2, "x")]).select("k", "bucket"),
+    # same through a merge_delta over the rewritten packed dir
+    t.merge_delta(spark, t.prepare_tombstone(_df(spark, [(3, 2, "x")]), "k"),
                   _df(spark, [(7, 2, "g")]), "k", pack_rows=4)
     rows = t.read(spark).collect()
     assert len(rows) == 3
     assert {r["k"]: r["v"] for r in rows} == {1: "a", 2: "B", 7: "g"}
+
+
+def test_understated_pack_rows_hint_warns_and_keeps_rows(spark, cat, caplog):
+    # an under-stated hint still writes one correct packed file, but is a
+    # silent perf cliff at scale — the readback's row count flags it
+    t = cat.table("t", DDL)
+    rows = [(i, i % 3, "x") for i in range(10)]
+    with caplog.at_level(logging.WARNING, logger="newscrawler_spark.tablelib"):
+        t.append(_df(spark, rows), pack_rows=2)
+    warned = [r for r in caplog.records if r.levelno == logging.WARNING]
+    assert len(warned) == 1
+    assert "t:" in warned[0].getMessage() and "10 rows" in warned[0].getMessage()
+    assert "hint 2" in warned[0].getMessage()
+    assert {(r["k"], r["bucket"], r["v"]) for r in t.read(spark).collect()} == set(rows)
